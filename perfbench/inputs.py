@@ -211,10 +211,11 @@ def serve_inputs(seed: int, n: int, clusters: int, n_single: int, n_panels: int,
 
 
 def refresh_inputs(
-    seed: int, n0: int, clusters: int, batches: int, ins: int, dup: int, upd: int, dele: int,
+    seed: int, n0: int, clusters: int, ins: int, dup: int, upd: int, dele: int,
 ) -> dict:
-    """An initial corpus of ``n0`` captioned image files and ``batches``
-    change batches. Each batch inserts ``ins`` new ids, ``dup`` of them
+    """An initial corpus of ``n0`` captioned image files and an endless
+    iterator of change batches, each drawn only when the caller asks for
+    it. Each batch inserts ``ins`` new ids, ``dup`` of them
     near-duplicates of live ids (a slightly perturbed vector and a caption
     with one word replaced), updates ``upd`` live ids to a new vector and
     caption, and deletes ``dele`` live ids; a delete lands as a ``.del``
@@ -228,33 +229,35 @@ def refresh_inputs(
         lab = rng.integers(0, clusters, m)
         return unit_rows(centers[lab] + rng.standard_normal((m, DIM)) * (0.6 / np.sqrt(DIM)))
 
-    live = {int(i): v for i, v in enumerate(draw(n0))}
-    text = {int(i): d for i, d in enumerate(texts(rng, n0))}
-    initial = [(f"{i:07d}.img", image_bytes(v, text[i])) for i, v in live.items()]
-    out = [{"live": dict(live), "text": dict(text)}]
-    next_id = n0
-    for _ in range(batches):
-        keys = np.array(sorted(live), dtype=np.int64)
-        chosen = rng.choice(keys, upd + dele + dup, replace=False)
-        upd_ids, del_ids, src_ids = chosen[:upd], chosen[upd:upd + dele], chosen[upd + dele:]
-        ins_ids = np.arange(next_id, next_id + ins, dtype=np.int64)
-        next_id += ins
-        ins_v = np.concatenate([draw(ins - dup),
-                                perturb(rng, np.stack([live[int(i)] for i in src_ids]), 0.1)])
-        ins_t = texts(rng, ins - dup) + [edit_one_word(rng, text[int(i)]) for i in src_ids]
-        upd_v, upd_t = draw(upd), texts(rng, upd)
-        files = [(f"{i:07d}.img", image_bytes(v, t)) for i, v, t in zip(ins_ids, ins_v, ins_t)]
-        files += [(f"{i:07d}.img", image_bytes(v, t)) for i, v, t in zip(upd_ids, upd_v, upd_t)]
-        files += [(f"{i:07d}.del", TOMBSTONE) for i in del_ids]
-        old = {int(i): live[int(i)] for i in del_ids}
-        live, text = dict(live), dict(text)
-        for ids_, vs, ts in ((ins_ids, ins_v, ins_t), (upd_ids, upd_v, upd_t)):
-            for i, v, t in zip(ids_, vs, ts):
-                live[int(i)], text[int(i)] = v, t
-        for i in del_ids:
-            del live[int(i)], text[int(i)]
-        out.append({
-            "files": files, "ins": ins_ids, "ins_v": ins_v, "upd": upd_ids,
-            "upd_v": upd_v, "del": del_ids, "del_old": old, "live": live, "text": text,
-        })
-    return {"initial": initial, "initial_live": out[0]["live"], "batches": out[1:]}
+    live0 = {int(i): v for i, v in enumerate(draw(n0))}
+    text0 = {int(i): d for i, d in enumerate(texts(rng, n0))}
+    initial = [(f"{i:07d}.img", image_bytes(v, text0[i])) for i, v in live0.items()]
+
+    def batches():
+        live, text, next_id = live0, text0, n0
+        while True:
+            keys = np.array(sorted(live), dtype=np.int64)
+            chosen = rng.choice(keys, upd + dele + dup, replace=False)
+            upd_ids, del_ids, src_ids = chosen[:upd], chosen[upd:upd + dele], chosen[upd + dele:]
+            ins_ids = np.arange(next_id, next_id + ins, dtype=np.int64)
+            next_id += ins
+            ins_v = np.concatenate([draw(ins - dup),
+                                    perturb(rng, np.stack([live[int(i)] for i in src_ids]), 0.1)])
+            ins_t = texts(rng, ins - dup) + [edit_one_word(rng, text[int(i)]) for i in src_ids]
+            upd_v, upd_t = draw(upd), texts(rng, upd)
+            files = [(f"{i:07d}.img", image_bytes(v, t)) for i, v, t in zip(ins_ids, ins_v, ins_t)]
+            files += [(f"{i:07d}.img", image_bytes(v, t)) for i, v, t in zip(upd_ids, upd_v, upd_t)]
+            files += [(f"{i:07d}.del", TOMBSTONE) for i in del_ids]
+            old = {int(i): live[int(i)] for i in del_ids}
+            live, text = dict(live), dict(text)
+            for ids_, vs, ts in ((ins_ids, ins_v, ins_t), (upd_ids, upd_v, upd_t)):
+                for i, v, t in zip(ids_, vs, ts):
+                    live[int(i)], text[int(i)] = v, t
+            for i in del_ids:
+                del live[int(i)], text[int(i)]
+            yield {
+                "files": files, "ins": ins_ids, "ins_v": ins_v, "upd": upd_ids,
+                "upd_v": upd_v, "del": del_ids, "del_old": old, "live": live, "text": text,
+            }
+
+    return {"initial": initial, "initial_live": live0, "batches": batches()}

@@ -115,9 +115,12 @@ def build_session(work_dir: str, trace: bool):
     from pyspark.sql import SparkSession
 
     n = _nproc()
-    # a fixed, pre-touched heap: the JVM's share of peak RSS no longer
-    # depends on when G1 decides to grow, and no measured call pays for
-    # heap growth
+    # Only the heap's cap is fixed. The serial collector sizes the heap
+    # from the live data left after each collection, where G1 grows it
+    # when collections take a large share of time, which depends on how
+    # busy the host is. So the JVM's share of peak_rss_mb follows what the
+    # package holds: over three serve seeds on a 4-core host it ranged
+    # 0.94-0.97 GB under the serial collector and 1.36-1.67 GB under G1.
     heap_mb = max(1024, min(4096, _memtotal_mb() // 8))
     tmp = os.path.join(work_dir, "tmp")
     os.makedirs(tmp)
@@ -126,8 +129,7 @@ def build_session(work_dir: str, trace: bool):
         .appName("perfbench")
         .config("spark.driver.memory", f"{heap_mb}m")
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{heap_mb}m -XX:+AlwaysPreTouch "
-                f"-Djava.io.tmpdir={tmp} -Dderby.system.home={work_dir}")
+                f"-XX:+UseSerialGC -Djava.io.tmpdir={tmp} -Dderby.system.home={work_dir}")
         .config("spark.local.dir", os.path.join(work_dir, "local"))
         .config("spark.sql.warehouse.dir", os.path.join(work_dir, "warehouse"))
         .config("spark.sql.shuffle.partitions", str(n))
@@ -328,7 +330,7 @@ def main() -> int:
         sampler.stop()
 
     if lost:
-        res = {"ops": ctx.ops, "attempted": len(ctx.ops),
+        res = {"ops": ctx.ops, "timed_ops": [], "attempted": len(ctx.ops),
                "failed": sum(1 for o in ctx.ops if not o.ok), "p50_ms": None,
                "items_per_s": None, "report": {}, "latency_ms": []}
     ops = res["ops"]
@@ -338,13 +340,14 @@ def main() -> int:
         "items_per_s": res["items_per_s"], "peak_rss_mb": sampler.peak_mb,
     }
     samples = {
-        "setup_s": 1, "p50_ms": len(res["latency_ms"]), "items_per_s": len(ops),
+        "setup_s": 1, "p50_ms": len(res["latency_ms"]), "items_per_s": len(res["timed_ops"]),
         "peak_rss_mb": 1,
     }
     report = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "nproc": _nproc(), "memtotal_mb": _memtotal_mb(),
-        "driver_heap_mb": heap_mb, "loadavg_start": load_start, "loadavg_end": os.getloadavg(),
+        "driver_heap_mb": heap_mb, "peak_rss_parts_mb": sampler.peak_parts,
+        "loadavg_start": load_start, "loadavg_end": os.getloadavg(),
         "commit": _commit(), "source_sha1": _source_digest(),
         "session_start_s": session_s,
         "end_to_end": {k: {"value": v, "unit": END_TO_END[k], "samples": samples[k]}
@@ -370,7 +373,7 @@ def main() -> int:
             for sp in tracer.all_spans()]
         report["trace_overhead"] = overhead(ops, os.path.join(
             out_root, f"{args.workload}-s{args.seed}-t0.json"))
-        layer = per_layer_metrics(ops)
+        layer = per_layer_metrics(res["timed_ops"])
         report["per_layer"] = {k: {"value": v, "unit": PER_LAYER[k]} for k, v in layer.items()}
         metrics = report["per_layer"]
     report["wall_s"] = time.perf_counter() - t_start
@@ -395,6 +398,8 @@ def _render(report: dict) -> str:
              f"source_sha1={report['source_sha1']}",
              f"loadavg start={report['loadavg_start']} end={report['loadavg_end']} "
              f"session_start_s={report['session_start_s']:.3f} wall_s={report['wall_s']:.1f}",
+             "peak_rss_parts_mb " + " ".join(
+                 f"{k}={v:.0f}" for k, v in report["peak_rss_parts_mb"].items()),
              f"attempted={report['attempted']} failed={report['failed']} "
              f"error_rate={report['error_rate']:.4f} ops={report['ops']}"]
     for title, table in (("end-to-end", report["end_to_end"]),

@@ -23,28 +23,35 @@ from contextlib import contextmanager
 _PAGE_KB = os.sysconf("SC_PAGE_SIZE") // 1024
 
 
-def _proc_table() -> tuple[dict, dict]:
-    """``(children by parent pid, rss in KiB by pid)`` from ``/proc``."""
-    children: dict = {}
-    rss: dict = {}
+def _stat(pid) -> tuple | None:
+    """``(parent pid, rss in KiB, command)`` of ``pid``, or None if it is
+    gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            stat = f.read()
+    except OSError:
+        return None
+    # the command name may hold spaces and parens: fields start after the last ')'
+    fields = stat[stat.rfind(")") + 2:].split()
+    return int(fields[1]), int(fields[21]) * _PAGE_KB, stat[stat.find("(") + 1:stat.rfind(")")]
+
+
+def _proc_table() -> dict:
+    """``_stat`` of every process in ``/proc``, by pid."""
+    table = {}
     for name in os.listdir("/proc"):
-        if not name.isdigit():
-            continue
-        try:
-            with open(f"/proc/{name}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        # the command name may hold spaces and parens: fields start after the last ')'
-        fields = stat[stat.rfind(")") + 2:].split()
-        pid = int(name)
-        children.setdefault(int(fields[1]), []).append(pid)
-        rss[pid] = int(fields[21]) * _PAGE_KB
-    return children, rss
+        if name.isdigit():
+            st = _stat(name)
+            if st is not None:
+                table[int(name)] = st
+    return table
 
 
-def descendants(root: int) -> list[int]:
-    children, _ = _proc_table()
+def descendants(root: int, table: dict | None = None) -> list[int]:
+    table = _proc_table() if table is None else table
+    children: dict = {}
+    for pid, (ppid, _, _) in table.items():
+        children.setdefault(ppid, []).append(pid)
     out, stack = [], list(children.get(root, []))
     while stack:
         p = stack.pop()
@@ -53,31 +60,50 @@ def descendants(root: int) -> list[int]:
     return out
 
 
-def tree_rss_mb(root: int) -> float:
-    children, rss = _proc_table()
-    total, stack = 0, [root]
-    while stack:
-        p = stack.pop()
-        total += rss.get(p, 0)
-        stack.extend(children.get(p, []))
-    return total / 1024.0
-
-
 class MemorySampler:
     """Samples the RSS of this process tree every ``interval`` seconds on
-    a daemon thread; keeps the run's peak and the peak of each open
-    span. A peak must hold for two consecutive samples: a process between
-    ``fork`` and ``exec`` can briefly report its parent's whole RSS, and
-    no real allocation of this run comes and goes within 50 ms."""
+    a daemon thread; keeps the run's peak (and its parts) and the peak
+    of each open span. A peak must hold for two consecutive samples: a
+    process between ``fork`` and ``exec`` can briefly report its parent's
+    whole RSS, and no real allocation of this run comes and goes within
+    50 ms.
+
+    The tree's members are found by a scan of all of ``/proc`` every
+    ``RESCAN`` samples; the samples in between read only the members'
+    own ``stat`` files. A scan holds the GIL for about 2 ms, and the
+    driver's py4j calls, which take most of an operation's time, each
+    wait for it on return."""
+
+    RESCAN = 10
 
     def __init__(self, interval: float = 0.05) -> None:
         self.interval = interval
         self.peak_mb = 0.0
-        self._last = 0.0
+        self.peak_parts: dict = {}
+        self._members: list = []
+        self._n = 0
+        self._last: dict = {}
         self._open: dict = {}
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
+
+    def _parts_mb(self) -> dict:
+        """RSS in MB of this process and its descendants, in three parts:
+        this process (``driver``), Java processes (``jvm``) and the rest,
+        the JVM's Python workers (``workers``)."""
+        root = os.getpid()
+        if self._n % self.RESCAN == 0:
+            table = _proc_table()
+            self._members = descendants(root, table)
+            stats = [table[p] for p in self._members]
+        else:
+            stats = [st for st in map(_stat, self._members) if st is not None]
+        self._n += 1
+        parts = {"driver": _stat(root)[1], "jvm": 0, "workers": 0}
+        for _, rss, comm in stats:
+            parts["jvm" if comm == "java" else "workers"] += rss
+        return {k: v / 1024.0 for k, v in parts.items()}
 
     def start(self) -> "MemorySampler":
         self.sample()
@@ -90,10 +116,13 @@ class MemorySampler:
         self.sample()
 
     def sample(self) -> float:
-        now = tree_rss_mb(os.getpid())
         with self._lock:
-            mb, self._last = min(now, self._last), now
-            self.peak_mb = max(self.peak_mb, mb)
+            now = self._parts_mb()
+            held = min((now, self._last or now), key=lambda p: sum(p.values()))
+            self._last = now
+            mb = sum(held.values())
+            if mb > self.peak_mb:
+                self.peak_mb, self.peak_parts = mb, held
             for k in self._open:
                 self._open[k] = max(self._open[k], mb)
         return mb
@@ -138,7 +167,12 @@ class Span:
 class Tracer:
     """Records spans when ``enabled``; otherwise ``span`` only yields an
     ``extra`` dict nobody reads, so untraced runs pay nothing but a
-    context manager per call."""
+    context manager per call.
+
+    An extra metric that costs work of its own (a Spark count, a
+    directory walk) is passed to ``defer`` and computed by ``flush``
+    once no span is open, so spans hold only the package call and the
+    action that materializes it."""
 
     def __init__(self, spark, sampler: MemorySampler, enabled: bool) -> None:
         self.sc = spark.sparkContext
@@ -147,6 +181,19 @@ class Tracer:
         self.roots: list = []
         self._stack: list = []
         self._next = 0
+        self._deferred: list = []
+
+    def defer(self, fn) -> None:
+        if self.enabled:
+            self._deferred.append(fn)
+
+    def flush(self, run: bool = True) -> None:
+        """Run (or, after a failed operation, drop) the deferred extras."""
+        assert not self._stack, "flush inside an open span"
+        fns, self._deferred = self._deferred, []
+        if run:
+            for fn in fns:
+                fn()
 
     @contextmanager
     def span(self, name: str):

@@ -6,6 +6,7 @@
 import hashlib
 import os
 import sys
+from itertools import islice
 
 import numpy as np
 import pandas as pd
@@ -35,11 +36,16 @@ def _digest(obj, h=None):
     return h.hexdigest()
 
 
+N_BATCHES = 4
+
+
+def _refresh(seed):
+    inp = I.refresh_inputs(seed, **W.REFRESH)
+    return {**inp, "batches": list(islice(inp["batches"], N_BATCHES))}
+
+
 def _all(seed):
-    return {
-        "serve": I.serve_inputs(seed, **W.SERVE),
-        "refresh": I.refresh_inputs(seed, **W.REFRESH),
-    }
+    return {"serve": I.serve_inputs(seed, **W.SERVE), "refresh": _refresh(seed)}
 
 
 def test_same_seed_gives_byte_identical_inputs():
@@ -55,7 +61,7 @@ def test_other_seed_gives_other_inputs():
 
 
 def test_encoder_decodes_the_planted_vector():
-    inp = I.refresh_inputs(3, **W.REFRESH)
+    inp = _refresh(3)
     names, blobs = zip(*inp["initial"][:20])
     got = I.PlantedVectorEncoder().encode_batch(pd.Series(list(blobs)))
     for name, vec in zip(names, got):
@@ -65,7 +71,7 @@ def test_encoder_decodes_the_planted_vector():
 
 
 def test_change_batches_keep_the_live_corpus():
-    inp = I.refresh_inputs(3, **W.REFRESH)
+    inp = _refresh(3)
     live = dict(inp["initial_live"])
     for b in inp["batches"]:
         assert not set(map(int, b["ins"])) & set(live)
@@ -80,7 +86,7 @@ def test_change_batches_keep_the_live_corpus():
 
 
 def test_planted_duplicates_are_in_the_ground_truth():
-    inp = I.refresh_inputs(5, **W.REFRESH)
+    inp = _refresh(5)
     for b in inp["batches"]:
         keys = np.array(sorted(b["live"]), dtype=np.int64)
         x = np.stack([b["live"][int(k)] for k in keys])
@@ -92,7 +98,7 @@ def test_planted_duplicates_are_in_the_ground_truth():
 
 
 def test_caption_follows_the_vector():
-    inp = I.refresh_inputs(3, **W.REFRESH)
+    inp = _refresh(3)
     for name, blob in inp["batches"][0]["files"]:
         if name.endswith(".img"):
             i = int(name.split(".")[0])
